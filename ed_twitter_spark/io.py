@@ -37,6 +37,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# sidecar schemas as (column, SQL type); lineage columns in key-sorted order
+METRICS_COLS = (("stage", "string"), ("partition_id", "int"), ("rows", "bigint"))
+LINEAGE_COLS = (("deps", "string"), ("fingerprint", "string"), ("rows", "bigint"),
+                ("schema", "string"), ("stage", "string"), ("wall_s", "double"),
+                ("written_at", "string"))
+
+
 def _iceberg_catalog(spark: SparkSession) -> str | None:
     """Name of a configured Iceberg catalog, if any (else None → Parquet)."""
     for k, v in spark.sparkContext.getConf().getAll():
@@ -63,9 +70,9 @@ def write_stage(
 ) -> dict:
     """Materialize a stage: data + per-partition metrics + lineage row.
 
-    ``started_at`` is the wall-clock when the stage's build began; the
-    recorded wall_s spans build + execution + write. Returns the lineage
-    record (also written as a 1-row table).
+    ``started_at`` is when the stage's build began; wall_s spans build +
+    execution + write. Returns the lineage record (also a 1-row table). Past
+    the data write the commit runs one aggregate job; sidecars are local frames.
     """
     spark = df.sparkSession
     cat = _iceberg_catalog(spark)
@@ -76,38 +83,27 @@ def write_stage(
         df.write.mode("overwrite").parquet(data_path(root, stage))
         written = spark.read.parquet(data_path(root, stage))
 
-    # per-partition metrics over the data *as persisted* (scan partitioning),
-    # plus a totals row — one aggregation job, no collect loop
-    part_counts = (
-        written.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .select(F.lit(stage).alias("stage"), "partition_id", "rows")
-    )
-    # global aggregate (not groupBy) so an *empty* stage still yields its
-    # (stage, -1, 0) totals row — lineage must record empty-but-complete
-    totals = part_counts.agg(
-        F.coalesce(F.sum("rows"), F.lit(0)).cast("long").alias("rows")
-    ).select(
-        F.lit(stage).alias("stage"), F.lit(-1).alias("partition_id"), "rows"
-    )
-    metrics = part_counts.unionByName(totals).orderBy("partition_id")
-    metrics.write.mode("overwrite").parquet(f"{root}/{stage}/_metrics")
-    totals_row = metrics.where(F.col("partition_id") == -1).select("rows").first()
-    n_rows = int(totals_row[0]) if totals_row is not None else 0
+    # per-partition counts of the data *as persisted* (scan partitioning); the
+    # driver sums them, so an *empty* stage still records its (stage, -1, 0) row
+    counts = written.groupBy(F.spark_partition_id()).count()
+    parts = sorted(tuple(r) for r in counts.collect())
+    n_rows = sum(n for _, n in parts)
+    metrics = [(stage, p, n) for p, n in [(-1, n_rows), *parts]]
+    _write_rows(spark, metrics, METRICS_COLS, f"{root}/{stage}/_metrics")
 
-    record = {
-        "stage": stage,
-        "fingerprint": fp,
-        "deps": json.dumps(deps),
-        "schema": written.schema.json(),
-        "rows": n_rows,
-        "wall_s": round(time.time() - started_at, 3),
-        "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    spark.createDataFrame([record]).write.mode("overwrite").parquet(
-        f"{root}/{stage}/_lineage"
-    )
+    record = dict(stage=stage, fingerprint=fp, deps=json.dumps(deps), schema=written.schema.json(),
+                  rows=n_rows, wall_s=round(time.time() - started_at, 3),
+                  written_at=time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()))
+    lineage = [tuple(record[c] for c, _ in LINEAGE_COLS)]
+    _write_rows(spark, lineage, LINEAGE_COLS, f"{root}/{stage}/_lineage")
     return record
+
+
+def _write_rows(spark: SparkSession, rows: list[tuple], cols: tuple, path: str) -> None:
+    """One Parquet file of typed literals: a JVM-only frame, no Python worker."""
+    structs = [F.struct(*(F.lit(v).cast(t).alias(c) for v, (c, t) in zip(r, cols))) for r in rows]
+    local = spark.range(1, numPartitions=1).select(F.inline(F.array(*structs)))
+    local.write.mode("overwrite").parquet(path)
 
 
 def write_partitioned(

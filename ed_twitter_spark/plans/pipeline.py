@@ -13,8 +13,9 @@ downstream suffix.
 
 Stage boundaries double as shuffle barriers: transcripts and kb_alias scan
 the raw input once each; windows/triples shuffle on conv_id; components is
-the iterative CC loop; vertices/edges are broadcast-side joins. At 10^12
-turns every stage is restartable without recomputing its ancestors.
+the iterative CC loop; vertices/edges are broadcast-side joins. A stage
+starts once its dependencies are written, so independent stages run
+concurrently; at 10^12 turns every stage restarts without recomputing its ancestors.
 
 Run:  spark-submit --py-files ed_twitter_spark.zip -m ed_twitter_spark.plans.pipeline
 (or `python -m ed_twitter_spark.plans.pipeline [sf_dir] [checkpoint_root]`).
@@ -24,9 +25,11 @@ from __future__ import annotations
 
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from ed_twitter_spark import io as kgio
@@ -117,34 +120,35 @@ def run_pipeline(
 ) -> dict[str, dict]:
     """Execute the DAG; returns {stage: lineage record + 'skipped' flag}.
 
-    ``resume=False`` rebuilds everything; ``force`` invalidates the named
-    stages (and, via fingerprints, their descendants).
+    ``resume=False`` rebuilds everything; ``force`` invalidates the named stages (and,
+    via fingerprints, their descendants); a failed stage stops its descendants and re-raises.
     """
-    results: dict[str, dict] = {}
-    fps: dict[str, str] = {}
-    rebuilt: set[str] = set()
+    fps, skipped = {}, {}
     for st in STAGES:
-        fp = kgio.fingerprint(st.name, st.version, sf_dir, *(fps[d] for d in st.deps))
-        fps[st.name] = fp
+        fp = fps[st.name] = kgio.fingerprint(st.name, st.version, sf_dir, *map(fps.get, st.deps))
         lineage = kgio.read_lineage(spark, root, st.name) if resume else None
-        must_run = (
-            lineage is None
-            or lineage["fingerprint"] != fp
-            or st.name in force
-            # a forced/invalidated ancestor rebuilt this run: its output may
-            # differ from what this stage's checkpoint was built from
-            or any(d in rebuilt for d in st.deps)
-        )
-        if not must_run:
-            results[st.name] = {**lineage, "skipped": True}
-            continue
-        rebuilt.add(st.name)
+        # a rebuilt ancestor's output may differ from what the checkpoint saw
+        if (lineage and lineage["fingerprint"] == fp and st.name not in force
+                and all(d in skipped for d in st.deps)):
+            skipped[st.name] = {**lineage, "skipped": True}
+
+    def build(st, deps):
+        for d in deps:
+            d.result()  # a failed dependency's exception ends this stage too
         inputs = {d: kgio.read_stage(spark, root, d) for d in st.deps}
         t0 = time.time()
         df = st.build(spark, sf_dir, inputs)
-        record = kgio.write_stage(df, root, st.name, fp, list(st.deps), started_at=t0)
-        results[st.name] = {**record, "skipped": False}
-    return results
+        record = kgio.write_stage(df, root, st.name, fps[st.name], list(st.deps), started_at=t0)
+        return {**record, "skipped": False}
+
+    running = {}
+    with ThreadPoolExecutor(max_workers=len(STAGES)) as pool:
+        for st in STAGES:  # topological order: dependencies are submitted first
+            if st.name not in skipped:
+                deps = [running[d] for d in st.deps if d in running]
+                # the stage's thread gets its own copy of the caller's job group and properties
+                running[st.name] = pool.submit(inheritable_thread_target(build), st, deps)
+    return {st.name: skipped.get(st.name) or running[st.name].result() for st in STAGES}
 
 
 def main(argv: list[str]) -> None:

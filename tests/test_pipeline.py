@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+from dataclasses import replace
+
+import pytest
 from conftest import SF_SMOKE
+from pyspark.sql import functions as F
 
 from ed_twitter_spark import io as kgio
+from ed_twitter_spark.plans import pipeline
 from ed_twitter_spark.plans.pipeline import STAGES, run_pipeline
 
 
@@ -36,16 +41,65 @@ def test_pipeline_runs_resumes_and_invalidates(spark, tmp_path):
 
 
 def test_metrics_per_partition_sum_to_total(spark, tmp_path):
+    """The sidecar contract: exact ``_metrics``/``_lineage`` schemas (lineage
+    columns in key-sorted order); ``_metrics`` holds one row per partition of
+    the data as read back plus exactly one totals row equal to lineage rows."""
     root = str(tmp_path / "ckpt")
     run_pipeline(spark, SF_SMOKE, root)
-    m = kgio.read_metrics(spark, root, "triples").collect()
-    total = next(r for r in m if r["partition_id"] == -1)
-    parts = [r for r in m if r["partition_id"] >= 0]
-    assert len(parts) >= 1
-    assert sum(r["rows"] for r in parts) == total["rows"]
-    lineage = kgio.read_lineage(spark, root, "triples")
-    assert lineage["rows"] == total["rows"]
-    assert lineage["deps"] == '["candidates"]'
+    for st in STAGES:
+        m = kgio.read_metrics(spark, root, st.name)
+        lineage = spark.read.parquet(f"{root}/{st.name}/_lineage")
+        assert m.schema.simpleString() == "struct<stage:string,partition_id:int,rows:bigint>"
+        assert lineage.schema.simpleString() == (
+            "struct<deps:string,fingerprint:string,rows:bigint,schema:string,"
+            "stage:string,wall_s:double,written_at:string>"
+        )
+        assert lineage.count() == 1
+        rows = m.collect()
+        assert {r["stage"] for r in rows} == {st.name}
+        want = kgio.read_stage(spark, root, st.name).groupBy(F.spark_partition_id()).count()
+        got = sorted((r["partition_id"], r["rows"]) for r in rows if r["partition_id"] >= 0)
+        assert got and got == sorted(tuple(r) for r in want.collect()), st.name
+        totals = [r["rows"] for r in rows if r["partition_id"] == -1]
+        assert totals == [sum(n for _, n in got)], st.name
+        assert totals == [kgio.read_lineage(spark, root, st.name)["rows"]], st.name
+    assert kgio.read_lineage(spark, root, "triples")["deps"] == '["candidates"]'
+
+
+def test_failed_stage_stops_descendants(spark, tmp_path, monkeypatch):
+    """A stage whose build raises fails the run with that exception; its
+    descendants never checkpoint, while the stages that do not depend on it
+    (transcripts → windows beside kb_alias) still do."""
+
+    def boom(spark, sf_dir, inputs):
+        raise RuntimeError("kb_alias failed")
+
+    monkeypatch.setattr(pipeline, "STAGES", tuple(
+        replace(st, build=boom) if st.name == "kb_alias" else st for st in STAGES
+    ))
+    root = str(tmp_path / "ckpt")
+    with pytest.raises(RuntimeError, match="kb_alias failed"):
+        pipeline.run_pipeline(spark, SF_SMOKE, root)
+    for name in ("kb_alias", "candidates", "triples", "components", "vertices", "edges"):
+        assert kgio.read_lineage(spark, root, name) is None, name
+    for name in ("transcripts", "windows"):
+        assert kgio.read_lineage(spark, root, name) is not None, name
+
+
+def test_stage_jobs_inherit_callers_job_group(spark, tmp_path):
+    """Stages run on pool threads, yet every job of a cold run is counted
+    under the caller's job group: none runs outside it."""
+    sc = spark.sparkContext
+    ungrouped = set(sc.statusTracker().getJobIdsForGroup())
+    sc.setJobGroup("test-pipeline-cold", "cold run")
+    try:
+        run_pipeline(spark, SF_SMOKE, str(tmp_path / "ckpt"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    grouped = sc.statusTracker().getJobIdsForGroup("test-pipeline-cold")
+    # each stage at least writes its data, counts it and writes two sidecars
+    assert len(grouped) >= 4 * len(STAGES)
+    assert set(sc.statusTracker().getJobIdsForGroup()) - ungrouped == set()
 
 
 def test_write_stage_empty_output(spark, tmp_path):

@@ -1,7 +1,9 @@
 """Checkpoint-pipeline benchmark: cold run, full resume, forced mid-restart.
 
 Writes BENCH/PIPELINE.md with per-stage rows/wall and the three resume
-behaviors the north rule requires evidence for (BASELINE.json:6,14).
+behaviors the north rule requires evidence for (BASELINE.json:6,14). The
+cold run executes under a job group, so its Spark job count (every stage
+commit adds to it) is printed and recorded beside its wall time.
 
 Usage: python tools/pipeline_bench.py [sf_dir]
 """
@@ -26,9 +28,13 @@ def main():
         from ed_twitter_spark.session import get_spark
 
         spark = get_spark("pipeline_bench")
+        sc = spark.sparkContext
+        sc.setJobGroup("pipeline_bench-cold", "cold end-to-end build")
         t0 = time.time()
         r1 = run_pipeline(spark, sf_dir, root)
         cold = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        cold_jobs = len(sc.statusTracker().getJobIdsForGroup("pipeline_bench-cold"))
         t0 = time.time()
         r2 = run_pipeline(spark, sf_dir, root)
         warm = time.time() - t0
@@ -58,16 +64,19 @@ descendants.
                 )
             f.write(
                 f"""
-| scenario | wall (s) |
-|---|---|
-| cold end-to-end | {cold:.1f} |
-| resume, everything checkpointed | {warm:.2f} |
-| forced re-run of `triples` (+ descendants) | {mid:.1f} |
+| scenario | wall (s) | Spark jobs |
+|---|---|---|
+| cold end-to-end | {cold:.1f} | {cold_jobs} |
+| resume, everything checkpointed | {warm:.2f} | |
+| forced re-run of `triples` (+ descendants) | {mid:.1f} | |
 
 Regenerate: `python tools/pipeline_bench.py {sf_dir}`
 """
             )
-        print(f"cold={cold:.1f}s resume={warm:.2f}s forced-mid={mid:.1f}s -> BENCH/PIPELINE.md")
+        print(
+            f"cold={cold:.1f}s cold_jobs={cold_jobs} resume={warm:.2f}s "
+            f"forced-mid={mid:.1f}s -> BENCH/PIPELINE.md"
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
